@@ -9,10 +9,7 @@ bands — by pigeonhole, any pair within the distance budget agrees
 exactly on at least one band — equi-join on (band, band_value), then
 verify exact Hamming distance on the (small) candidate set with the
 JVM ``bit_count`` of the XOR.  No all-pairs product anywhere; the
-shape is identical to the reference-era SimHash text path
-(``textops.simhash_dedup_pairs``) but generic over any precomputed
-64-bit hash column, and uses ``F.bit_count`` (one codegen'd
-instruction) instead of a 64-term bit loop.
+banding and the candidate self-join come from :mod:`.bands`.
 
 Scale notes (100 TB / 10^12 images):
   * candidate generation is a shuffle on (band, key) — 2^band_bits
@@ -29,6 +26,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from .bands import band_candidates, bit_band_keys
 from .textops import _spread_small_input
 
 __all__ = [
@@ -72,37 +70,11 @@ def hamming_neardup_pairs(
     base = df.select(id_col, F.col(hash_col).alias("__h"), *keep_cols)
     # consumed by both self-join sides: one computation, not two
     base = base.localCheckpoint(eager=False)
-
-    parts = []
-    for i in range(nb):
-        lo = i * chunk
-        # last band absorbs the remainder bits so coverage is exact
-        width = bits - lo if i == nb - 1 else chunk
-        key = F.shiftrightunsigned(F.col("__h"), lo)
-        if lo + width < 64:
-            key = key.bitwiseAND(F.lit((1 << width) - 1))
-        parts.append(F.struct(F.lit(i).alias("band"), key.alias("key")))
-    ex = base.select(
-        id_col, "__h", *keep_cols, F.explode(F.array(*parts)).alias("bk")
-    ).select(id_col, "__h", *keep_cols, "bk.band", "bk.key")
-
-    a, b = ex.alias("a"), ex.alias("b")
-    sel = [
-        F.col(f"a.{id_col}").alias("id_a"),
-        F.col(f"b.{id_col}").alias("id_b"),
-        F.col("a.__h").alias("__ha"),
-        F.col("b.__h").alias("__hb"),
-    ]
-    for c in keep_cols:
-        sel.append(F.col(f"a.{c}").alias(f"{c}_a"))
-        sel.append(F.col(f"b.{c}").alias(f"{c}_b"))
-    cand = (
-        a.join(b, (F.col("a.band") == F.col("b.band"))
-               & (F.col("a.key") == F.col("b.key"))
-               & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-        .select(*sel)
-    )
-    x = F.col("__ha").bitwiseXOR(F.col("__hb"))
+    # the last band absorbs the remainder bits so coverage is exact
+    widths = [chunk] * (nb - 1) + [bits - chunk * (nb - 1)]
+    cand = band_candidates(base, id_col, bit_band_keys(F.col("__h"), widths),
+                           carry=("__h", *keep_cols))
+    x = F.col("__h_a").bitwiseXOR(F.col("__h_b"))
     if bits < 64:
         x = x.bitwiseAND(F.lit((1 << bits) - 1))
     out_cols = ["id_a", "id_b", "hamming"] + [

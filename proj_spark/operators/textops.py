@@ -23,6 +23,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .bands import band_candidates
+
 __all__ = [
     "normalize_text_col",
     "tokens_col",
@@ -34,7 +36,6 @@ __all__ = [
     "minhash_lsh_groups",
     "dedup_full",
     "dedup_connected_components",
-    "simhash_col",
     "simhash_dedup_pairs",
     "token_stats",
     "quality_score",
@@ -180,6 +181,30 @@ def minhash_signature(df: DataFrame, text_col: str = "text",
     return with_sh.select("*", *sigs).drop("__shingles", "__base")
 
 
+def _minhash_band_keys(num_hashes: int, bands: int) -> Column:
+    """``array<struct<band, key>>`` over a :func:`minhash_signature`
+    frame: band ``b``'s key is the md5 of its ``num_hashes // bands``
+    signature values joined by ``_`` (the oracle hashes the same
+    string)."""
+    rows_per_band = num_hashes // bands
+    band_cols = []
+    for b in range(bands):
+        parts = [F.col(f"mh_{b * rows_per_band + r}").cast("string")
+                 for r in range(rows_per_band)]
+        band_cols.append(F.struct(F.lit(b).alias("band"),
+                                  F.md5(F.concat_ws("_", *parts)).alias("key")))
+    return F.array(*band_cols)
+
+
+def _jaccard_col(sa: Column, sb: Column) -> Column:
+    """Exact Jaccard of two distinct-element arrays.  Two empty sets
+    (docs shorter than one shingle) have union 0: define jaccard 0, not
+    a divide-by-zero under ANSI mode."""
+    inter = F.size(F.array_intersect(sa, sb)).cast("double")
+    union = (F.size(sa) + F.size(sb)).cast("double") - inter
+    return F.when(union > 0, inter / union).otherwise(F.lit(0.0))
+
+
 def minhash_lsh_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -198,7 +223,6 @@ def minhash_lsh_pairs(
     on candidates — the all-pairs product never materializes).
     Output: (id_a, id_b, jaccard) with id_a < id_b, jaccard >= threshold.
     """
-    rows_per_band = num_hashes // bands
     df = _spread_small_input(df)
     sig = minhash_signature(df.select(id_col, text_col), text_col,
                             num_hashes, k, unit, keep_hashed="__shset")
@@ -208,13 +232,6 @@ def minhash_lsh_pairs(
     # char mode targets — and, at threshold 0, would emit pairs the
     # SQL oracle (where NULL keys never compare equal) does not
     sig = sig.where(F.col("mh_0").isNotNull())
-    band_cols = []
-    for b in range(bands):
-        parts = [F.col(f"mh_{b * rows_per_band + r}") for r in range(rows_per_band)]
-        band_cols.append(
-            F.struct(F.lit(b).alias("band"),
-                     F.md5(F.concat_ws("_", *[p.cast("string") for p in parts])).alias("key"))
-        )
     # verify over the precomputed DISTINCT hashed-shingle sets (longs),
     # not the raw texts: a doc colliding in P buckets would otherwise
     # re-tokenize + re-shingle P times, and for char mode the shingle
@@ -223,33 +240,19 @@ def minhash_lsh_pairs(
     # equals Jaccard over the raw shingle sets (both engines hash with
     # the same md5, so the oracle mirrors this exactly).
     # the band-key explode carries ONLY (id, band, key): the shingle
-    # arrays never enter the self-join or any exchange
+    # arrays never enter the self-join or any exchange.  Both self-join
+    # sides re-derive the (cheap) explode from the materialized
+    # signature RDD — one planning pass and one materialization job
+    # fewer than checkpointing the explode
     sig = sig.localCheckpoint(eager=False)
-    exploded = sig.select(
-        F.col(id_col), F.explode(F.array(*band_cols)).alias("bk")
-    ).select(id_col, F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
-    # no second checkpoint: both self-join sides re-derive the (cheap)
-    # explode from the materialized signature RDD — one planning pass
-    # and one materialization job fewer than checkpointing the explode
-
-    a = exploded.alias("a")
-    b = exploded.alias("b")
     # dedup the BARE id pairs (a doc pair colliding in several bands is
     # one candidate), then fetch each side's hashed-shingle set with
     # one equi-join against the materialized signature frame — so the
     # exact-Jaccard verify runs ONCE per candidate pair and the only
     # exchanges carrying arrays are the two (tiny) candidate-side
     # joins, which AQE broadcasts.  Same pair set, same jaccard values.
-    cand = (
-        a.join(b, (F.col("a.band") == F.col("b.band"))
-               & (F.col("a.key") == F.col("b.key"))
-               & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-    )
+    cand = band_candidates(sig, id_col, _minhash_band_keys(num_hashes, bands)
+                           ).dropDuplicates(["id_a", "id_b"])
     shsets = sig.select(id_col, "__shset")
     cand = (
         cand.join(shsets.select(F.col(id_col).alias("id_a"),
@@ -257,15 +260,8 @@ def minhash_lsh_pairs(
         .join(shsets.select(F.col(id_col).alias("id_b"),
                             F.col("__shset").alias("sh_b")), "id_b")
     )
-    sa, sb = F.col("sh_a"), F.col("sh_b")
-    inter = F.size(F.array_intersect(sa, sb)).cast("double")
-    union = (F.size(sa) + F.size(sb)).cast("double") - inter
-    # degenerate docs (shorter than one shingle) share the empty-
-    # signature bucket; their union is 0 — define jaccard 0, not a
-    # divide-by-zero under ANSI mode
-    jac = F.when(union > 0, inter / union).otherwise(F.lit(0.0))
     return (
-        cand.withColumn("jaccard", jac)
+        cand.withColumn("jaccard", _jaccard_col(F.col("sh_a"), F.col("sh_b")))
         .where(F.col("jaccard") >= jaccard_threshold)
         .select("id_a", "id_b", "jaccard")
     )
@@ -308,20 +304,13 @@ def minhash_lsh_groups(
     """
     df = _spread_small_input(df)
     base = df.select(id_col, text_col)
-    rows_per_band = num_hashes // bands
     sig = minhash_signature(base, text_col, num_hashes, k,
                             keep_hashed="__shset")
     # feeds the band explode AND both sides of the verify join
     sig = sig.localCheckpoint(eager=False)
-    band_cols = []
-    for b in range(bands):
-        parts = [F.col(f"mh_{b * rows_per_band + r}") for r in range(rows_per_band)]
-        band_cols.append(
-            F.struct(F.lit(b).alias("band"),
-                     F.md5(F.concat_ws("_", *[p.cast("string") for p in parts])).alias("key"))
-        )
     ex = sig.select(
-        F.col(id_col), F.explode(F.array(*band_cols)).alias("bk")
+        F.col(id_col),
+        F.explode(_minhash_band_keys(num_hashes, bands)).alias("bk")
     ).select(id_col, F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
 
     # bucket-min via a partition-wide window min: ONE exchange on
@@ -354,12 +343,10 @@ def minhash_lsh_groups(
             "cand_canon",
         )
     )
-    sa, sb = F.col("__shset"), F.col("__cshset")
-    inter = F.size(F.array_intersect(sa, sb)).cast("double")
-    union = (F.size(sa) + F.size(sb)).cast("double") - inter
+    jac = _jaccard_col(F.col("__shset"), F.col("__cshset"))
     verified = need.select(
         F.col(id_col),
-        F.when(inter / union >= jaccard_threshold, F.col("cand_canon"))
+        F.when(jac >= jaccard_threshold, F.col("cand_canon"))
         .otherwise(F.col(id_col))
         .alias("canonical_id"),
     )
@@ -634,18 +621,6 @@ def decontaminate_flags(
     )
 
 
-def simhash_col(text: Column, bits: int = 48, k: int = 1) -> Column:
-    """SimHash: per bit position, sign of the sum over tokens of
-    (+1/-1) from the token's md5 bit.  Expressed as JVM aggregate over
-    the token array per bit — no UDF.  Returns BIGINT.
-
-    NOTE: prefer :func:`simhash_from_tokens_col` over a materialized
-    token column in DataFrame code — this Column-only form re-tokenizes
-    the text once per bit."""
-    toks = F.array_distinct(tokens_col(text)) if k == 1 else shingles_col(text, k)
-    return simhash_from_tokens_col(toks, bits)
-
-
 def simhash_from_tokens_col(toks: Column, bits: int = 48) -> Column:
     """SimHash from an already-materialized (distinct) token array:
     hash each token ONCE, then derive every bit from that value."""
@@ -683,11 +658,11 @@ def simhash_from_hashes_col(hashes: Column, bits: int = 48) -> Column:
 def simhash_dedup_pairs(df: DataFrame, text_col: str = "text",
                         id_col: str = "doc_id", bits: int = 16,
                         max_hamming: int = 2) -> DataFrame:
-    """Near-dup pairs by SimHash Hamming distance: band the hash into
-    (max_hamming+1) chunks — pigeonhole guarantees colliding docs share
-    a chunk — then verify exact Hamming distance on candidates."""
-    nb = max_hamming + 1
-    chunk = bits // nb
+    """Near-dup pairs by SimHash Hamming distance: the doc's ``bits``-bit
+    SimHash, then :func:`~.imagedup.hamming_neardup_pairs` over it.
+    Output: (id_a, id_b, hamming) with id_a < id_b."""
+    from .imagedup import hamming_neardup_pairs
+
     df = _spread_small_input(df)
     sh = (
         df.withColumn("__toks", F.array_distinct(tokens_col(F.col(text_col))))
@@ -695,45 +670,11 @@ def simhash_dedup_pairs(df: DataFrame, text_col: str = "text",
         .select(F.col(id_col),
                 simhash_from_hashes_col(F.col("__thash"), bits).alias("simhash"))
     )
-    sh = sh.localCheckpoint(eager=False)  # consumed by both join sides
-    parts = [
-        F.struct(
-            F.lit(i).alias("band"),
-            F.shiftrightunsigned(F.col("simhash"), i * chunk)
-            .bitwiseAND(F.lit((1 << chunk) - 1)).alias("key"),
-        )
-        for i in range(nb)
-    ]
-    ex = sh.select(id_col, "simhash", F.explode(F.array(*parts)).alias("bk")).select(
-        id_col, "simhash", "bk.band", "bk.key"
-    )
-    a, b = ex.alias("a"), ex.alias("b")
-    cand = (
-        a.join(b, (F.col("a.band") == F.col("b.band")) & (F.col("a.key") == F.col("b.key"))
-               & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            F.col("a.simhash").alias("sh_a"),
-            F.col("b.simhash").alias("sh_b"),
-        )
-    )
-    x = F.col("sh_a").bitwiseXOR(F.col("sh_b"))
-    hamming = None
-    for i in range(bits):
-        bit = F.shiftrightunsigned(x, i).bitwiseAND(F.lit(1))
-        hamming = bit if hamming is None else hamming + bit
-    # Hamming verify BEFORE the pair-dedup shuffle (see
-    # hamming_neardup_pairs): random band collisions are filtered in
-    # the join's codegen stage; the exchange sees only verified pairs.
-    # hamming is a pure function of the pair, so the result set is
-    # unchanged.
-    return (
-        cand.withColumn("hamming", hamming.cast("int"))
-        .where(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
-        .dropDuplicates(["id_a", "id_b"])
-    )
+    # materialized after the spread, so the Hamming join's own spread
+    # sees a file-less frame and adds no second exchange
+    sh = sh.localCheckpoint(eager=False)
+    return hamming_neardup_pairs(sh, id_col=id_col, hash_col="simhash",
+                                 max_hamming=max_hamming, bits=bits)
 
 
 # ---------------------------------------------------------------------------

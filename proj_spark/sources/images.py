@@ -159,70 +159,54 @@ def _dct_mat(n: int) -> np.ndarray:
 _DCT32 = _dct_mat(32)
 
 
+# DCT coefficients within this fraction of the block's largest |coef|
+# of zero or of the median count as equal to it: for flat, tiny or
+# smooth images those coefficients are zero (or tied) in exact
+# arithmetic, and their ulp noise depends on the batch shape and the
+# BLAS kernel, so leaving them to the threshold made the hash depend on
+# how it was computed
+_SNAP = 1e-11
+
+
 def phash64(arr: np.ndarray) -> int:
-    """64-bit perceptual hash: gray -> area-resample to 32x32 -> 2D DCT
-    -> 8x8 low-frequency block -> median threshold."""
-    gray = arr.astype(np.float64) @ np.array([0.299, 0.587, 0.114])
-    h, w = gray.shape
-    # area resample to 32x32 via block means on an upsampled grid
-    ys = (np.arange(32) * h // 32)
-    xs = (np.arange(32) * w // 32)
-    ye = np.maximum(((np.arange(32) + 1) * h + 31) // 32, ys + 1)
-    xe = np.maximum(((np.arange(32) + 1) * w + 31) // 32, xs + 1)
-    csum = np.zeros((h + 1, w + 1))
-    csum[1:, 1:] = gray.cumsum(0).cumsum(1)
-    # fully vectorized block means — elementwise identical to the old
-    # per-row loop (same subtraction order, same int product divisor)
-    small = (csum[np.ix_(ye, xe)] - csum[np.ix_(ys, xe)]
-             - csum[np.ix_(ye, xs)] + csum[np.ix_(ys, xs)]) \
-        / ((ye - ys)[:, None] * (xe - xs)[None, :])
-    dct = _DCT32 @ small @ _DCT32.T
-    low = dct[:8, :8].copy()
-    med = np.median(np.concatenate([low.ravel()[1:]]))  # skip DC
-    bits = (low.ravel() > med).astype(np.uint64)
-    # vectorized bit packing — same value as the old 64-step shift loop
-    # (msb-first), same uint64 wrap semantics
-    weights = np.uint64(1) << np.arange(63, -1, -1, dtype=np.uint64)
-    val = (bits * weights).sum(dtype=np.uint64)
-    # to signed int64 for a Spark LongType column
-    return int(np.int64(val.astype(np.uint64)))
+    """64-bit perceptual hash of one (h, w, 3) uint8 image: the n = 1
+    case of :func:`phash64_batch`."""
+    return int(phash64_batch(arr[None])[0])
 
 
 def phash64_batch(arrs: np.ndarray) -> np.ndarray:
-    """Vectorized :func:`phash64` over a same-shape (n, h, w, 3) uint8
-    stack -> int64[n].  Bit-identical to the scalar path: every
-    floating step (gray weights, cumulative sums, block-mean order of
-    operations, per-slice BLAS DCT, axis median) runs in the same order
-    per item, only batched across the leading axis.  This is the
-    tile-pyramid hot path — hashing a level's tiles in one call instead
-    of one Python call per tile."""
+    """64-bit perceptual hashes of a same-shape (n, h, w, 3) uint8 stack
+    -> int64[n]: gray -> area-resample to 32x32 -> 2D DCT -> 8x8
+    low-frequency block -> median threshold (DC excluded from the
+    median), msb first.  This is the tile-pyramid hot path — hashing a
+    level's tiles in one call instead of one Python call per tile."""
     n, h, w = arrs.shape[:3]
     if n == 0:
         return np.empty(0, dtype=np.int64)
-    # per-item 2-D matmul: the batched (n,h,w,3)@(3,) gufunc takes a
-    # different summation path than the scalar (h,w,3)@(3,) call and
-    # drifts by ulps, which can flip bits at the median threshold
+    # per-item 2-D matmul, the summation order the per-image hash has
+    # always used; the batched (n,h,w,3)@(3,) gufunc may sum differently
     wvec = np.array([0.299, 0.587, 0.114])
     gray = np.stack([a.astype(np.float64) @ wvec for a in arrs])
+    # area resample to 32x32 via block means on an upsampled grid
     ys = (np.arange(32) * h // 32)
     xs = (np.arange(32) * w // 32)
     ye = np.maximum(((np.arange(32) + 1) * h + 31) // 32, ys + 1)
     xe = np.maximum(((np.arange(32) + 1) * w + 31) // 32, xs + 1)
     csum = np.zeros((n, h + 1, w + 1))
     csum[:, 1:, 1:] = gray.cumsum(1).cumsum(2)
-    # vectorized over rows too — elementwise identical to the per-row
-    # form (same subtraction order, same int product divisor)
     iy, ix = np.ix_(ye, xe)
     iy0, ix0 = np.ix_(ys, xs)
     small = (csum[:, iy, ix] - csum[:, iy0, ix]
              - csum[:, iy, ix0] + csum[:, iy0, ix0]) \
         / ((ye - ys)[:, None] * (xe - xs)[None, :])
     dct = np.empty((n, 32, 32))
-    for i in range(n):  # per-slice 2-D BLAS, same calls as the scalar
+    for i in range(n):  # per-slice 2-D BLAS
         dct[i] = _DCT32 @ small[i] @ _DCT32.T
     low = dct[:, :8, :8].reshape(n, 64)
-    med = np.median(low[:, 1:], axis=1)  # skip DC
-    bits = (low > med[:, None]).astype(np.uint64)
+    tol = _SNAP * np.abs(low).max(axis=1, keepdims=True)
+    low = np.where(np.abs(low) <= tol, 0.0, low)
+    med = np.median(low[:, 1:], axis=1, keepdims=True)  # skip DC
+    bits = (low - med > tol).astype(np.uint64)
     weights = (np.uint64(1) << np.arange(63, -1, -1, dtype=np.uint64))
     return (bits * weights).sum(axis=1, dtype=np.uint64).astype(np.int64)
 

@@ -161,6 +161,47 @@ def test_phash64_batch_bit_identical():
     assert phash64_batch(np.empty((0, 8, 8, 3), dtype=np.uint8)).shape == (0,)
 
 
+def test_phash64_independent_of_blas_threads(tmp_path):
+    """The hash must not depend on the BLAS kernel: recompute a set of
+    flat, tiny and ordinary images in a subprocess pinned to one
+    OpenBLAS thread and compare with this process."""
+    import os
+    import subprocess
+    import sys
+
+    from proj_spark.sources.images import phash64_batch
+
+    rng = np.random.default_rng(11)
+    stacks = []
+    for h, w in [(1, 1), (1, 7), (2, 3), (4, 9), (16, 7), (24, 18), (64, 64)]:
+        arrs = rng.integers(0, 256, size=(5, h, w, 3), dtype=np.uint8)
+        arrs[0] = 77  # flat
+        stacks.append(arrs)
+    np.savez(tmp_path / "imgs.npz", *stacks)
+
+    def hashes(arrs):
+        return " ".join(str(int(v)) for v in [*phash64_batch(arrs),
+                                               *map(phash64, arrs)])
+
+    script = (
+        "import sys, numpy as np\n"
+        "from proj_spark.sources.images import phash64, phash64_batch\n"
+        "z = np.load(sys.argv[1])\n"
+        f"for i in range({len(stacks)}):\n"
+        "    a = z[f'arr_{i}']\n"
+        "    print(' '.join(str(int(v)) for v in "
+        "[*phash64_batch(a), *map(phash64, a)]))\n"
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, OPENBLAS_NUM_THREADS="1", OMP_NUM_THREADS="1",
+               PYTHONPATH=os.pathsep.join(
+                   filter(None, [root, os.environ.get("PYTHONPATH")])))
+    res = subprocess.run(
+        [sys.executable, "-c", script, str(tmp_path / "imgs.npz")],
+        env=env, capture_output=True, text=True, check=True)
+    assert res.stdout.splitlines() == [hashes(a) for a in stacks]
+
+
 def test_jpeg_chroma_subsampling_roundtrip():
     """Round-3 verdict ask #2: real-world JPEGs are 4:2:0 — the codec
     must encode and decode subsampled MCU layouts (4:2:0 16x16 MCUs

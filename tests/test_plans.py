@@ -183,22 +183,55 @@ def test_pip_join_chunked_plan_unions_broadcasts(spark):
     assert "SortMergeJoin" not in plan and "CartesianProduct" not in plan
 
 
-def test_hamming_neardup_plan_no_cartesian_jvm_verify(spark):
-    """Image near-dup: candidate generation must be an equi-join on
-    (band, key) — never a cross product — and the Hamming verify must
-    be JVM bit_count (codegen), not a Python stage."""
+def _banded_self_join(spark, op):
+    from proj_spark.operators.ann import embedding_neardup_pairs
     from proj_spark.operators.imagedup import hamming_neardup_pairs
+    from proj_spark.operators.textops import (minhash_lsh_pairs,
+                                              simhash_dedup_pairs)
 
-    df = spark.createDataFrame(
-        pd.DataFrame({"image_id": np.arange(500),
-                      "phash": np.arange(500) * 2654435761 % (1 << 62)}))
-    out = hamming_neardup_pairs(df, id_col="image_id", hash_col="phash",
-                                max_hamming=3)
-    plan = _plan(out)
+    docs = spark.createDataFrame(pd.DataFrame({
+        "doc_id": range(60),
+        "text": [f"the quick brown fox number {i % 7} jumps over the "
+                 f"lazy dog" for i in range(60)],
+    }))
+    if op == "hamming_neardup_pairs":
+        df = spark.createDataFrame(
+            pd.DataFrame({"image_id": np.arange(500),
+                          "phash": np.arange(500) * 2654435761 % (1 << 62)}))
+        return hamming_neardup_pairs(df, id_col="image_id", hash_col="phash",
+                                     max_hamming=3)
+    if op == "simhash_dedup_pairs":
+        return simhash_dedup_pairs(docs, bits=16, max_hamming=2)
+    if op == "minhash_lsh_pairs":
+        return minhash_lsh_pairs(docs, num_hashes=16, bands=4,
+                                 jaccard_threshold=0.4)
+    emb = spark.createDataFrame(pd.DataFrame({
+        "vec_id": np.arange(60),
+        "embedding": [np.random.default_rng(i % 20).uniform(-1, 1, 8).tolist()
+                      for i in range(60)],
+    }))
+    return embedding_neardup_pairs(emb, threshold=0.9, dim=8)
+
+
+@pytest.mark.parametrize("op", [
+    "hamming_neardup_pairs", "simhash_dedup_pairs", "minhash_lsh_pairs",
+    "embedding_neardup_pairs"])
+def test_banded_self_join_plan_no_cartesian_jvm_verify(spark, op):
+    """Every banded near-dup operator: candidate generation is an
+    equi-join on (band, key) — never a cross product — with no Python
+    stage anywhere, the Hamming verifies are JVM bit_count (codegen),
+    and the plan carries no more hash Exchanges than before the
+    operators shared one banding primitive (1 each on these inputs:
+    AQE broadcasts the small candidate sides)."""
+    plan = _plan(_banded_self_join(spark, op))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
-    assert "bit_count" in plan
-    assert "PythonUDF" not in plan and "mapInPandas" not in plan.lower()
+    for py in ("PythonUDF", "ArrowEvalPython", "BatchEvalPython",
+               "MapInPandas"):
+        assert py not in plan, py
+    if op in ("hamming_neardup_pairs", "simhash_dedup_pairs"):
+        assert "bit_count" in plan
+    assert plan.count("Exchange hashpartitioning") <= 1, plan
 
 
 def test_ann_norms_computed_prejoin(spark):

@@ -102,6 +102,31 @@ def test_simhash_bits_cap():
         simhash_from_hashes_col(F.array(F.lit(1)), bits=64)
 
 
+def test_minhash_lsh_groups_docs_shorter_than_one_shingle(spark):
+    # no 3-shingle at all: both docs get the empty signature bucket and
+    # verify with union 0, which must read as jaccard 0 (not an ANSI
+    # divide-by-zero), so each doc stays its own canonical
+    docs = spark.createDataFrame([(1, "a b"), (2, "x y")],
+                                 "doc_id long, text string")
+    out = minhash_lsh_groups(docs, k=3).collect()
+    assert sorted((r.doc_id, r.canonical_id) for r in out) == [(1, 1), (2, 2)]
+
+
+def test_lit_double_array_non_finite(spark):
+    import math
+
+    from proj_spark.operators.ann import _lit_double_array, _sql_double
+
+    vals = [1.5, float("nan"), float("inf"), float("-inf"), -0.0, 5e-324]
+    got = spark.range(1).select(_lit_double_array(vals).alias("a")).first().a
+    assert got[0] == 1.5 and math.isnan(got[1])
+    assert got[2:4] == [math.inf, -math.inf]
+    assert math.copysign(1.0, got[4]) == -1.0 and got[5] == 5e-324
+    # finite values keep the shortest round-trip literal
+    for x in (0.1, -0.0, math.pi, 5e-324, 1e300):
+        assert _sql_double(x) == repr(x) + "D"
+
+
 def test_token_stats_known(spark):
     df = spark.createDataFrame(
         pd.DataFrame([{"doc_id": 0, "text": "  Hello   WORLD  foo "}])

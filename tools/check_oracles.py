@@ -3,10 +3,15 @@
 twin at a given scale factor, compare row count / schema / values.
 
 Usage: python tools/check_oracles.py [sf_dir] [query_name ...]
+
+The session runs on ``local[$SPARK_GRAFT_CPUS]`` (default: every core)
+with 1 GB of driver memory per core.  A query name that is not in
+``queries()`` is an error: the script exits 2 before starting Spark.
 """
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
@@ -14,7 +19,7 @@ import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 TABLES = (
     "region nation customer supplier part orders lineitem events "
@@ -78,13 +83,19 @@ def main():
     import __spark_entry__ as E
     from pyspark.sql import SparkSession
 
+    qs = E.queries()
+    unknown = sorted(only - set(qs))
+    if unknown:
+        print(f"unknown query name(s): {', '.join(unknown)}", file=sys.stderr)
+        return 2
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
     spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "16")
+        SparkSession.builder.master(f"local[{cpus}]")
+        .config("spark.sql.shuffle.partitions", str(2 * cpus))
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "8g")
+        .config("spark.driver.memory", f"{cpus}g")
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
@@ -92,7 +103,6 @@ def main():
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
-    qs = E.queries()
     oracles = E.oracle_sql()
     n_pass = n_fail = n_rowsonly = 0
     for name, fn in qs.items():
