@@ -52,7 +52,6 @@ __all__ = [
     "get_url_endpoint",
     "grid_cache_enable",
     "grid_cache_set_max_size",
-    "grid_cache_clear",
     "fetch_grid",
     "get_wait_time",
     "MAX_RETRIES",
@@ -133,16 +132,6 @@ def cache_dir() -> str:
         "PROJ_SPARK_GRID_CACHE",
         os.path.join(os.path.expanduser("~"), ".cache", "proj_spark",
                      "grids"))
-
-
-def grid_cache_clear() -> None:
-    d = cache_dir()
-    if os.path.isdir(d):
-        for fn in os.listdir(d):
-            try:
-                os.unlink(os.path.join(d, fn))
-            except OSError:
-                pass
 
 
 def get_wait_time(retrycount: int) -> float:

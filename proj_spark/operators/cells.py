@@ -32,14 +32,12 @@ from pyspark.sql import functions as F
 __all__ = [
     "MAX_LEVEL",
     "cell_col",
-    "with_cell",
+    "cell_block",
     "cell_parent_col",
-    "cell_ring_col",
     "np_cell",
     "np_cell_parent",
     "np_cell_ring",
     "np_cell_to_lonlat",
-    "cell_level_col",
 ]
 
 MAX_LEVEL = 26  # 2*26 morton bits + 5 level bits = 57 <= 63
@@ -160,51 +158,43 @@ def _col_ij(lon: Column, lat: Column, level: int) -> tuple[Column, Column]:
     return ix, iy
 
 
+def _col_cell(ix: Column, iy: Column, level: int) -> Column:
+    morton = _col_spread(ix).bitwiseOR(F.shiftleft(_col_spread(iy), 1))
+    return F.shiftleft(morton, 5).bitwiseOR(F.lit(level))
+
+
 def cell_col(lon: Column, lat: Column, level: int) -> Column:
     """Cell id Column from lon/lat degree Columns — JVM-side, no UDF."""
     assert 0 <= level <= MAX_LEVEL
     ix, iy = _col_ij(lon, lat, level)
-    morton = _col_spread(ix).bitwiseOR(F.shiftleft(_col_spread(iy), 1))
-    return F.shiftleft(morton, 5).bitwiseOR(F.lit(level)).alias("cell")
+    return _col_cell(ix, iy, level).alias("cell")
 
 
-def with_cell(df, lon_col: str, lat_col: str, level: int,
-              out: str = "cell"):
-    """Append a cell-id column via CHAINED projections.
+def cell_block(df, level: int, x0: Column, x1: Column, y0: Column,
+               y1: Column, out: str = "cell"):
+    """One row per cell of the index block ``[x0, x1] x [y0, y1]`` at
+    ``level``, the cell id in column ``out`` — the candidate-cell
+    explode behind every cell-indexed join (polygon covering cells,
+    radius and kNN query rings).  Pure JVM: explode(x) x explode(y)
+    then one Morton spread per row.
 
-    Equivalent to ``cell_col`` (bit-for-bit; parity tested).  The
-    nested Column form textually duplicates each spread stage's input
-    ~2x per stage; whole-stage codegen's subexpression elimination
-    absorbs that (both measured >10 M rows/s at steady state), but the
-    chained form keeps every intermediate evaluated once even if a
-    plan falls out of codegen — prefer it when composing the cell id
-    with other large expressions in one projection."""
+    Longitude wraps (``pmod``) and is capped at one full turn
+    (``x0 .. x0 + 2^level - 1``); latitude is clamped to the grid rows.
+    So no cell appears twice for a row and no dedup is needed.  Callers
+    must pass ``x0 <= x1`` and a latitude range that is non-empty after
+    clamping (Spark's ``sequence(a, b)`` counts DOWN when a > b)."""
     assert 0 <= level <= MAX_LEVEL
     n = 1 << level
-    cx, cy = f"__cix_{out}", f"__ciy_{out}"
-    ix = F.greatest(
-        F.lit(0),
-        F.least(F.lit(n - 1),
-                F.floor((F.col(lon_col) + F.lit(180.0)) / F.lit(360.0) * F.lit(float(n)))),
-    ).cast("long")
-    iy = F.greatest(
-        F.lit(0),
-        F.least(F.lit(n - 1),
-                F.floor((F.col(lat_col) + F.lit(90.0)) / F.lit(180.0) * F.lit(float(n)))),
-    ).cast("long")
-    df = df.withColumn(cx, ix).withColumn(cy, iy)
-    for shift, mask in _MASKS:
-        df = df.withColumn(
-            cx, (F.col(cx).bitwiseOR(F.shiftleft(F.col(cx), shift))).bitwiseAND(F.lit(mask))
-        ).withColumn(
-            cy, (F.col(cy).bitwiseOR(F.shiftleft(F.col(cy), shift))).bitwiseAND(F.lit(mask))
-        )
-    morton = F.col(cx).bitwiseOR(F.shiftleft(F.col(cy), 1))
-    return df.withColumn(out, F.shiftleft(morton, 5).bitwiseOR(F.lit(level))).drop(cx, cy)
-
-
-def cell_level_col(cell: Column) -> Column:
-    return cell.bitwiseAND(F.lit(0x1F)).cast("int")
+    bx, by = f"__bx_{out}", f"__by_{out}"
+    return (
+        df.withColumn(bx, F.explode(F.sequence(
+            x0, F.least(x1, x0 + F.lit(n - 1)))))
+        .withColumn(by, F.explode(F.sequence(
+            F.greatest(y0, F.lit(0)), F.least(y1, F.lit(n - 1)))))
+        .withColumn(out, _col_cell(F.pmod(F.col(bx), F.lit(n)), F.col(by),
+                                   level))
+        .drop(bx, by)
+    )
 
 
 def cell_parent_col(cell: Column, level: int, parent_level: int) -> Column:
@@ -213,23 +203,3 @@ def cell_parent_col(cell: Column, level: int, parent_level: int) -> Column:
     return F.shiftleft(
         F.shiftrightunsigned(morton, 2 * (level - parent_level)), 5
     ).bitwiseOR(F.lit(parent_level))
-
-
-def cell_ring_col(cell: Column, level: int, r: int) -> Column:
-    """Array Column of all cells within Chebyshev distance ``r`` of the
-    cell — built from (2r+1)^2 JVM expressions, used for kNN candidate
-    generation (cell-ring expansion, SURVEY.md §2.2 joins row).  Out-of
-    range latitudes yield NULL entries, filtered out of the array."""
-    n = 1 << level
-    morton = F.shiftrightunsigned(cell, 5)
-    ix = _col_compact(morton)
-    iy = _col_compact(F.shiftrightunsigned(morton, 1))
-    cells = []
-    for dx in range(-r, r + 1):
-        for dy in range(-r, r + 1):
-            jx = (ix + F.lit(dx) + F.lit(n)) % F.lit(n)  # wrap lon
-            jy = iy + F.lit(dy)
-            m = _col_spread(jx).bitwiseOR(F.shiftleft(_col_spread(jy), 1))
-            c = F.shiftleft(m, 5).bitwiseOR(F.lit(level))
-            cells.append(F.when((jy >= 0) & (jy < n), c))
-    return F.filter(F.array(*cells), lambda x: x.isNotNull())

@@ -1,4 +1,4 @@
-"""Distributed spatial joins: point-in-polygon, kNN, cell equi-join.
+"""Distributed spatial joins: point-in-polygon, kNN, radius.
 
 The reference is a scalar transform library with NO relational
 operators (SURVEY.md §2.2) — this module is the distributed layer the
@@ -22,6 +22,7 @@ Scale design (10^12-point table, 1000 executors):
 from __future__ import annotations
 
 import math
+from functools import reduce
 from typing import Optional
 
 import numpy as np
@@ -31,7 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.window import Window
 
-from .cells import MAX_LEVEL, cell_col
+from .cells import MAX_LEVEL, _col_ij, cell_block, cell_col
 
 __all__ = [
     "EARTH_RADIUS_M",
@@ -39,7 +40,6 @@ __all__ = [
     "pip_join",
     "knn_join",
     "radius_join",
-    "cell_equi_join",
     "pip_anti_join",
 ]
 
@@ -84,108 +84,25 @@ def _np_point_in_rings(px: np.ndarray, py: np.ndarray, rings) -> np.ndarray:
     return inside
 
 
-def _make_pip_test_udf():
-    """Exact even-odd containment test, vectorized across the WHOLE
-    Arrow batch: every polygon group's (edge x candidate-point) pairs
-    are flattened into shared buffers and ray-cast in a handful of
-    numpy passes (chunked at ~4M pairs to bound memory).  A per-group
-    kernel call is 3-10x slower when a batch holds many small groups —
-    the normal shape once the polygon side reaches 10^5+ rows.  Built
-    lazily: pandas_udf return-type parsing needs an active session."""
-
-    @pandas_udf("boolean")
-    def _pip_test_udf(lon: pd.Series, lat: pd.Series, poly_id: pd.Series,
-                      rings: pd.Series) -> pd.Series:
-        px = lon.to_numpy(dtype=np.float64)
-        py = lat.to_numpy(dtype=np.float64)
-        n = len(px)
-        counts = np.zeros(n, dtype=np.int64)
-        groups = pd.Series(range(n)).groupby(poly_id.values, sort=False).groups
-        bufs: dict = {k: [] for k in ("x1", "y1", "x2", "y2", "row")}
-        pending = 0
-
-        def flush():
-            nonlocal pending
-            if not pending:
-                return
-            x1 = np.concatenate(bufs["x1"])
-            y1 = np.concatenate(bufs["y1"])
-            x2 = np.concatenate(bufs["x2"])
-            y2 = np.concatenate(bufs["y2"])
-            row = np.concatenate(bufs["row"])
-            ppx, ppy = px[row], py[row]
-            cond = (y1 > ppy) != (y2 > ppy)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                xint = (x2 - x1) * (ppy - y1) / (y2 - y1) + x1
-            crossed = cond & (ppx < xint)
-            np.add.at(counts, row[crossed], 1)
-            for k in bufs:
-                bufs[k].clear()
-            pending = 0
-
-        for _pid, idx in groups.items():
-            ii = np.asarray(idx, dtype=np.int64)
-            for ring in rings.iloc[ii[0]]:
-                pts = np.array([np.asarray(p, dtype=np.float64) for p in ring])
-                if len(pts) < 3:
-                    continue
-                n_edges = len(pts) - 1
-                n_pts = len(ii)
-                bufs["x1"].append(np.tile(pts[:-1, 0], n_pts))
-                bufs["y1"].append(np.tile(pts[:-1, 1], n_pts))
-                bufs["x2"].append(np.tile(pts[1:, 0], n_pts))
-                bufs["y2"].append(np.tile(pts[1:, 1], n_pts))
-                bufs["row"].append(np.repeat(ii, n_edges))
-                pending += n_edges * n_pts
-                if pending > 4_000_000:
-                    flush()
-        flush()
-        # global even-odd parity over all rings == per-ring XOR (holes)
-        return pd.Series(counts % 2 == 1)
-
-    return _pip_test_udf
-
-
 def _poly_covering_cells_df(polys: DataFrame, level: int,
                             rings_col: str, poly_id_col: str) -> DataFrame:
     """Executor-side bbox-covering cells per polygon: min/max over the
-    exterior ring (JVM array ops) -> explode the (ix, iy) index ranges ->
-    Morton-encode.  Pure Column math, so a million-polygon layer expands
-    in parallel on executors — the driver never materializes it (it only
-    flows through the driver once more if the result is broadcast)."""
-    from .cells import _col_spread
-
-    n = 1 << level
+    exterior ring (JVM array ops) -> :func:`cells.cell_block` over the
+    bbox's index range.  Pure Column math, so a million-polygon layer
+    expands in parallel on executors — the driver never materializes it
+    (it only flows through the driver once more if the result is
+    broadcast)."""
     ext = F.col(rings_col)[0]
     lons = F.transform(ext, lambda p: p[0])
     lats = F.transform(ext, lambda p: p[1])
-
-    def _idx(v: Column, off: float, span: float) -> Column:
-        i = F.floor((v + F.lit(off)) / F.lit(span) * F.lit(float(n)))
-        return F.greatest(F.lit(0), F.least(F.lit(n - 1), i)).cast("long")
-
-    cov = (
-        polys.select(poly_id_col, rings_col)
-        .withColumn("__minx", F.array_min(lons))
-        .withColumn("__maxx", F.array_max(lons))
-        .withColumn("__miny", F.array_min(lats))
-        .withColumn("__maxy", F.array_max(lats))
-        .withColumn("__ix0", _idx(F.col("__minx"), 180.0, 360.0))
-        .withColumn("__ix1", _idx(F.col("__maxx"), 180.0, 360.0))
-        .withColumn("__iy0", _idx(F.col("__miny"), 90.0, 180.0))
-        .withColumn("__iy1", _idx(F.col("__maxy"), 90.0, 180.0))
-        .withColumn("__ix", F.explode(F.sequence(F.col("__ix0"), F.col("__ix1"))))
-        .withColumn("__iy", F.explode(F.sequence(F.col("__iy0"), F.col("__iy1"))))
+    bb = polys.select(
+        poly_id_col,
+        F.array_min(lons).alias("bb_minx"), F.array_max(lons).alias("bb_maxx"),
+        F.array_min(lats).alias("bb_miny"), F.array_max(lats).alias("bb_maxy"),
     )
-    morton = _col_spread(F.col("__ix")).bitwiseOR(
-        F.shiftleft(_col_spread(F.col("__iy")), 1)
-    )
-    cell = F.shiftleft(morton, 5).bitwiseOR(F.lit(level))
-    return cov.select(
-        poly_id_col, rings_col, cell.alias("cell"),
-        F.col("__minx").alias("bb_minx"), F.col("__maxx").alias("bb_maxx"),
-        F.col("__miny").alias("bb_miny"), F.col("__maxy").alias("bb_maxy"),
-    )
+    ix0, iy0 = _col_ij(F.col("bb_minx"), F.col("bb_miny"), level)
+    ix1, iy1 = _col_ij(F.col("bb_maxx"), F.col("bb_maxy"), level)
+    return cell_block(bb, level, ix0, ix1, iy0, iy1)
 
 
 def _pack_edges_sdf(polys: DataFrame, poly_id_col: str,
@@ -373,6 +290,11 @@ def pip_join(
 
     ``how``: "inner" (default) or "left" (unmatched points kept with
     null poly_id).
+
+    Driver actions at construction: the edge-blob collect (one action;
+    a layer split into chunks collects once more per chunk), plus the
+    bbox-span stats aggregate when ``level`` is None.
+    ``tests/test_join_build_jobs.py`` pins the job counts.
     """
     if level is None:
         # bbox-span stats pass, only when the caller didn't pin the
@@ -398,8 +320,8 @@ def pip_join(
     n_chunks = max(1, -(-(n_edges * 32) // max_broadcast_bytes))
 
     if n_chunks == 1:
-        hits = _pip_inner(points, polys, level, lon_col, lat_col,
-                          poly_id_col, rings_col, pack_rows=pack_rows)
+        parts = [_pip_inner(points, polys, level, lon_col, lat_col,
+                            poly_id_col, rings_col, pack_rows=pack_rows)]
     else:
         chunk = F.pmod(F.xxhash64(F.col(poly_id_col).cast("string")),
                        F.lit(n_chunks))
@@ -408,9 +330,7 @@ def pip_join(
                        lon_col, lat_col, poly_id_col, rings_col)
             for i in range(n_chunks)
         ]
-        hits = parts[0]
-        for p in parts[1:]:
-            hits = hits.unionByName(p)
+    hits = reduce(DataFrame.unionByName, parts)
 
     if how == "inner":
         return hits
@@ -436,7 +356,7 @@ def _pip_inner(points, polys, level, lon_col, lat_col,
     edges_bc = spark.sparkContext.broadcast(_assemble_edges(pack_rows))
 
     pts = points.withColumn("cell", cell_col(F.col(lon_col), F.col(lat_col), level))
-    cand = pts.join(F.broadcast(cov_sdf.drop(rings_col)), "cell", "inner")
+    cand = pts.join(F.broadcast(cov_sdf), "cell", "inner")
     # JVM-side bbox pre-filter (whole-stage codegen): a polygon's bbox is
     # a superset of the polygon, so this only removes certain non-hits —
     # and it removes MOST candidates before they pay the Arrow transfer
@@ -459,17 +379,24 @@ def pip_anti_join(points: DataFrame, polys: DataFrame, **kwargs) -> DataFrame:
     return points.join(hits.select(*key_cols).distinct(), key_cols, "left_anti")
 
 
-def cell_equi_join(
-    left: DataFrame, right: DataFrame, level: int,
-    lon_col: str = "lon", lat_col: str = "lat",
-    broadcast_right: bool = True,
-) -> DataFrame:
-    """Co-locate two point sets by shared cell id (the basic spatial
-    equi-join; broadcast the small side, else shuffle-hash on cell)."""
-    l = left.withColumn("cell", cell_col(F.col(lon_col), F.col(lat_col), level))
-    r = right.withColumn("cell", cell_col(F.col(lon_col), F.col(lat_col), level))
-    r = F.broadcast(r) if broadcast_right else r
-    return l.join(r, "cell")
+def _query_cells(queries: DataFrame, level: int, rx: Column, ry: Column,
+                 lon_col: str, lat_col: str, query_id_col: str) -> DataFrame:
+    """Each query row exploded to the ``(2rx+1) x (2ry+1)`` block of
+    cells around its own cell (:func:`cells.cell_block`): columns
+    ``query_id, q_lon, q_lat, cand_cell``, one row per distinct cell."""
+    qix, qiy = _col_ij(F.col(lon_col), F.col(lat_col), level)
+    q = queries.select(
+        F.col(query_id_col),
+        F.col(lon_col).alias("q_lon"),
+        F.col(lat_col).alias("q_lat"),
+        qix.alias("__qix"), qiy.alias("__qiy"),
+        rx.alias("__rx"), ry.alias("__ry"),
+    )
+    qx, qy = F.col("__qix"), F.col("__qiy")
+    rx, ry = F.col("__rx"), F.col("__ry")
+    return cell_block(q, level, qx - rx, qx + rx, qy - ry, qy + ry,
+                      out="cand_cell").select(query_id_col, "q_lon", "q_lat",
+                                              "cand_cell")
 
 
 def radius_join(
@@ -500,10 +427,12 @@ def radius_join(
     longitude circle (the query's lat band is scanned; correct, and
     those rows are few).
 
-    Scale shape: queries explode their rings RELATIONALLY (pure JVM),
-    broadcast, equi-join against the big table's cell column — the
-    points table is never shuffled — then one codegen haversine
-    filter.  Output: (query_id, point_id, dist_m).
+    Scale shape: queries explode their rings RELATIONALLY (pure JVM,
+    :func:`cells.cell_block`), broadcast, equi-join against the big
+    table's cell column — the points table is never shuffled — then one
+    codegen haversine filter.  Output: (query_id, point_id, dist_m).
+    ``query_id`` is assumed unique (as in :func:`knn_join`): each query
+    row's block holds every cell once, so a repeated id repeats pairs.
 
     Broadcast guard (round-4 ADVICE, tightened round 6): near the
     poles ``rx`` saturates to the full longitude circle, so a large
@@ -520,10 +449,15 @@ def radius_join(
     ``max_broadcast_rows`` the join falls back to a shuffle hash join
     with a warning instead of dying in the broadcast with an opaque
     OOM.  The fallback shuffles the points table once on ``cell``.
+
+    Driver actions at construction: none with ``broadcast_queries`` set;
+    with the default guard, the LIMIT-bounded count of the queries side
+    (one action) and, only when that is inconclusive, one more for the
+    per-row ring estimate.  ``tests/test_join_build_jobs.py`` pins the
+    job counts.
     """
     if radius_m <= 0:
         raise ValueError(f"radius_m must be > 0, got {radius_m}")
-    from .cells import _col_ij, _col_spread
 
     rad_deg = math.degrees(radius_m / EARTH_RADIUS_M)
     if level is None:
@@ -537,7 +471,6 @@ def radius_join(
 
     pts = points.withColumn(
         "cell", cell_col(F.col(lon_col), F.col(lat_col), level))
-    qix, qiy = _col_ij(F.col(lon_col), F.col(lat_col), level)
     # chord-exact longitude span at the band's worst-case latitude; a
     # band reaching past the 89.99-deg clamp must saturate to the FULL
     # longitude circle (the clamp otherwise SHRINKS the ring and drops
@@ -550,32 +483,14 @@ def radius_join(
     lon_span_deg = F.degrees(F.lit(2.0) * F.asin(ratio))
     rx = F.least(F.ceil(lon_span_deg / F.lit(cw)).cast("int"),
                  F.lit(n // 2 + 1))
-    q = (
-        queries.select(
-            F.col(query_id_col),
-            F.col(lon_col).alias("q_lon"),
-            F.col(lat_col).alias("q_lat"),
-            qix.alias("__qix"),
-            qiy.alias("__qiy"),
-            rx.alias("__rx"),
-        )
-        .withColumn("__dx", F.explode(F.sequence(-F.col("__rx"), F.col("__rx"))))
-        .withColumn("__dy", F.explode(F.sequence(F.lit(-ry), F.lit(ry))))
-        .withColumn("__jx", F.pmod(F.col("__qix") + F.col("__dx"), F.lit(n)))
-        .withColumn("__jy", F.col("__qiy") + F.col("__dy"))
-        .where((F.col("__jy") >= 0) & (F.col("__jy") < n))
-    )
-    morton = _col_spread(F.col("__jx")).bitwiseOR(
-        F.shiftleft(_col_spread(F.col("__jy")), 1))
-    q = q.select(
-        query_id_col, "q_lon", "q_lat",
-        F.shiftleft(morton, 5).bitwiseOR(F.lit(level)).alias("cand_cell"),
-    ).dropDuplicates([query_id_col, "cand_cell"])  # polar wrap collisions
+    q = _query_cells(queries, level, rx, F.lit(ry), lon_col, lat_col,
+                     query_id_col)
     # decide broadcast vs shuffle.  Caller override first (True = no
     # plan-time action at all); else prove safety with the static
     # worst-case ring size and a LIMIT-bounded count; else fall back
     # to the refined per-row estimate (sum of (2rx+1)(2ry+1), an upper
-    # bound on exploded rows — the lat clamp and wrap-dedup shrink it)
+    # bound on exploded rows — the lat clamp and the one-turn cap
+    # shrink it)
     if broadcast_queries is None:
         worst_per_query = (2 * (n // 2 + 1) + 1) * (2 * ry + 1)
         threshold = max_broadcast_rows // worst_per_query
@@ -644,10 +559,7 @@ def _block_guard_col(q_lon: Column, q_lat: Column, level: int, ring: int) -> Col
     """
     n = 1 << level
     cw, ch = 360.0 / n, 180.0 / n
-    ix = F.greatest(F.lit(0), F.least(F.lit(n - 1),
-                    F.floor((q_lon + F.lit(180.0)) / F.lit(360.0) * F.lit(float(n)))))
-    iy = F.greatest(F.lit(0), F.least(F.lit(n - 1),
-                    F.floor((q_lat + F.lit(90.0)) / F.lit(180.0) * F.lit(float(n)))))
+    ix, iy = _col_ij(q_lon, q_lat, level)
     west = (ix - F.lit(ring)) * F.lit(cw) - F.lit(180.0)
     east = (ix + F.lit(ring + 1)) * F.lit(cw) - F.lit(180.0)
     south = (iy - F.lit(ring)) * F.lit(ch) - F.lit(90.0)
@@ -694,95 +606,45 @@ def _block_guard_col(q_lon: Column, q_lat: Column, level: int, ring: int) -> Col
     return F.least(g_s, g_n, g_lon)
 
 
-def _prereduce_topk(cand: DataFrame, k: int, query_id_col: str,
-                    point_id_col: str) -> DataFrame:
-    """Two-phase top-k, phase 1: per-PARTITION top-k per query with NO
-    shuffle — a partition-local sort (sortWithinPartitions, narrow) then
-    an Arrow-batched running head(k) per query.  Cuts the rows entering
-    the final per-query window from O(candidates) to
+def _topk(cand: DataFrame, k: int, lon_col: str, lat_col: str,
+          point_id_col: str, query_id_col: str, two_phase: bool) -> DataFrame:
+    """Per-query top-k by great-circle distance over (point x query)
+    candidate rows, ties broken by point id: columns ``query_id, q_lon,
+    q_lat, point_id, dist_m, rank``.
+
+    With ``two_phase`` a per-PARTITION top-k per query runs first with
+    NO shuffle — a partition-local sort (sortWithinPartitions, narrow)
+    then an Arrow-batched running head(k) per query.  It cuts the rows
+    entering the final per-query window from O(candidates) to
     O(k x partitions x queries-per-partition), which is what survives a
-    100x density scale-up; the final window then shuffles only the
-    reduced set."""
-    # point_id tiebreak matches the final window's ordering, so phase 1
-    # always keeps a prefix of the order phase 2 ranks by
-    sorted_ = cand.sortWithinPartitions(query_id_col, "dist_m", point_id_col)
-    schema = cand.schema
-
-    def _head(batches):
-        seen: dict = {}
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            grp = pdf.groupby(query_id_col, sort=False).cumcount()
-            base = pdf[query_id_col].map(lambda q: seen.get(q, 0))
-            keep = (grp + base.to_numpy()) < k
-            for q, cnt in pdf[query_id_col].value_counts().items():
-                seen[q] = seen.get(q, 0) + int(cnt)
-            out = pdf[keep.to_numpy()]
-            if len(out):
-                yield out
-
-    return sorted_.mapInPandas(_head, schema)
-
-
-def _ring_topk(
-    pts: DataFrame,
-    queries: DataFrame,
-    r: int,
-    k: int,
-    level: int,
-    lon_col: str,
-    lat_col: str,
-    point_id_col: str,
-    query_id_col: str,
-    two_phase: bool,
-) -> DataFrame:
-    """One candidate-generation round: queries explode their ring-``r``
-    cells RELATIONALLY — explode(dx) x explode(dy) then ONE Morton
-    spread per exploded row — so the whole q-side stays pure JVM (an
-    array-expression ring duplicates the compact->re-spread tree
-    (2r+1)^2 times and blows up Catalyst analysis; a numpy UDF avoids
-    that but puts a Python worker launch inside every broadcast build —
-    both measured slower).  Then BROADCAST, equi-join on the big
-    table's cell column, per-query top-k."""
-    from .cells import _col_ij, _col_spread
-
-    n = 1 << level
-    qix, qiy = _col_ij(F.col(lon_col), F.col(lat_col), level)
-    q = (
-        queries.select(
-            F.col(query_id_col),
-            F.col(lon_col).alias("q_lon"),
-            F.col(lat_col).alias("q_lat"),
-            qix.alias("__qix"),
-            qiy.alias("__qiy"),
-        )
-        .withColumn("__dx", F.explode(F.sequence(F.lit(-r), F.lit(r))))
-        .withColumn("__dy", F.explode(F.sequence(F.lit(-r), F.lit(r))))
-        .withColumn("__jx", F.pmod(F.col("__qix") + F.col("__dx"), F.lit(n)))
-        .withColumn("__jy", F.col("__qiy") + F.col("__dy"))
-        .where((F.col("__jy") >= 0) & (F.col("__jy") < n))
-    )
-    morton = _col_spread(F.col("__jx")).bitwiseOR(
-        F.shiftleft(_col_spread(F.col("__jy")), 1)
-    )
-    q = q.select(
-        query_id_col, "q_lon", "q_lat",
-        F.shiftleft(morton, 5).bitwiseOR(F.lit(level)).alias("cand_cell"),
-    )
-    if 2 * r + 1 >= n:
-        # the ring wraps the whole globe in longitude: pmod collides and
-        # would duplicate candidates (and thus top-k rows) — dedup the
-        # (small) q side before the join
-        q = q.dropDuplicates([query_id_col, "cand_cell"])
-    cand = pts.join(F.broadcast(q), pts["cell"] == q["cand_cell"], "inner")
+    100x density scale-up; the window then shuffles only the reduced
+    set."""
     cand = cand.select(
         query_id_col, "q_lon", "q_lat", point_id_col,
         haversine_col(F.col(lon_col), F.col(lat_col),
                       F.col("q_lon"), F.col("q_lat")).alias("dist_m"),
     )
     if two_phase:
-        cand = _prereduce_topk(cand, k, query_id_col, point_id_col)
+        # point_id tiebreak matches the window's ordering, so phase 1
+        # always keeps a prefix of the order phase 2 ranks by
+        sorted_ = cand.sortWithinPartitions(query_id_col, "dist_m",
+                                            point_id_col)
+
+        def _head(batches):
+            seen: dict = {}
+            for pdf in batches:
+                if pdf.empty:
+                    continue
+                grp = pdf.groupby(query_id_col, sort=False).cumcount()
+                base = pdf[query_id_col].map(lambda q: seen.get(q, 0))
+                keep = (grp + base.to_numpy()) < k
+                for q, cnt in pdf[query_id_col].value_counts().items():
+                    seen[q] = seen.get(q, 0) + int(cnt)
+                out = pdf[keep.to_numpy()]
+                if len(out):
+                    yield out
+
+        cand = sorted_.mapInPandas(_head, cand.schema)
     w = Window.partitionBy(query_id_col).orderBy(F.col("dist_m").asc(),
                                                  F.col(point_id_col).asc())
     return (
@@ -790,6 +652,25 @@ def _ring_topk(
         .where(F.col("rank") <= k)
         .select(query_id_col, "q_lon", "q_lat", point_id_col, "dist_m", "rank")
     )
+
+
+def _ring_topk(pts: DataFrame, queries: DataFrame, r: int, k: int,
+               level: int, lon_col: str, lat_col: str, point_id_col: str,
+               query_id_col: str, two_phase: bool) -> DataFrame:
+    """One candidate-generation round: queries explode their ring-``r``
+    block RELATIONALLY (:func:`cells.cell_block`: explode(x) x
+    explode(y) then ONE Morton spread per exploded row), so the whole
+    q-side stays pure JVM (an array-expression ring duplicates the
+    compact->re-spread tree (2r+1)^2 times and blows up Catalyst
+    analysis; a numpy UDF avoids that but puts a Python worker launch
+    inside every broadcast build — both measured slower).  Then
+    BROADCAST, equi-join on the big table's cell column, per-query
+    top-k."""
+    q = _query_cells(queries, level, F.lit(r), F.lit(r), lon_col, lat_col,
+                     query_id_col)
+    cand = pts.join(F.broadcast(q), pts["cell"] == q["cand_cell"], "inner")
+    return _topk(cand, k, lon_col, lat_col, point_id_col, query_id_col,
+                 two_phase)
 
 
 def knn_join(
@@ -838,6 +719,16 @@ def knn_join(
          pass (broadcast of those queries only).
 
     Output: query_id, q_lon, q_lat, point_id, dist_m, rank (1..k).
+    ``query_id`` is assumed unique.
+
+    Driver actions at construction: ``points.count()`` when both
+    ``level`` and ``n_points`` are None; with ``exact_fallback``, one
+    ``isEmpty`` per ring round (the round's candidate join runs then,
+    into a local checkpoint the result reuses), so a query set proven
+    in round 1 costs one action and each expansion round one more.
+    The brute-force pass adds none.  Under AQE one action runs as
+    several Spark jobs; ``tests/test_join_build_jobs.py`` pins the
+    counts.
     """
     block_cells = (2 * ring + 1) ** 2
     if level is None:
@@ -872,58 +763,45 @@ def knn_join(
             two_phase = est_cand > 5000.0
 
     pts = points.withColumn("cell", cell_col(F.col(lon_col), F.col(lat_col), level))
-    topk = _ring_topk(pts, queries, ring, k, level, lon_col, lat_col,
-                      point_id_col, query_id_col, two_phase)
     if not exact_fallback:
-        return topk
+        return _ring_topk(pts, queries, ring, k, level, lon_col, lat_col,
+                          point_id_col, query_id_col, two_phase)
 
     out_cols = [query_id_col, "q_lon", "q_lat", point_id_col, "dist_m", "rank"]
     wq = Window.partitionBy(query_id_col)  # reuses topk's partitioning: no exchange
-
-    def _flag(tk: DataFrame, r: int) -> DataFrame:
+    proven: list = []
+    remaining, r = queries, ring
+    for round_ in range(max(expansion_rounds, 0) + 1):
+        if round_:
+            r = expansion_factor * r + 1
+        tk = _ring_topk(pts, remaining, r, k, level, lon_col, lat_col,
+                        point_id_col, query_id_col, two_phase)
         ok = (F.count(F.lit(1)).over(wq) >= k) & (
             F.max("dist_m").over(wq)
             <= _block_guard_col(F.col("q_lon"), F.col("q_lat"), level, r)
         )
         # one consumer takes the proven rows, another the proven ids;
         # defer-checkpoint so the candidate join runs once, not twice
-        return tk.withColumn("__ok", ok).localCheckpoint(eager=False)
-
-    flagged = _flag(topk, ring)
-    proven = [flagged.where(F.col("__ok")).select(*out_cols)]
-    # unproven = not proven (covers zero-candidate queries, which have
-    # no topk rows at all); queries are the small side -> cheap anti-join
-    remaining = queries.join(
-        flagged.where(F.col("__ok")).select(query_id_col).distinct(),
-        query_id_col, "left_anti",
-    )
-    # Early exit when round 1 proved EVERY query — the designed common
-    # case at adaptive level.  The probe is one tiny job (queries are
-    # the small side by contract and `flagged` is already the
-    # checkpointed frame the probe's anti-join reads), and it saves
-    # constructing + planning the expansion and brute-force subplans,
-    # whose localCheckpoint calls alone measured ~1.2 s of driver time
-    # per call while contributing zero rows.  The result set is
-    # unchanged: expansion/brute over an empty `remaining` is empty.
-    if remaining.isEmpty():
-        return proven[0]
-
-    r = ring
-    for _ in range(max(expansion_rounds, 0)):
-        r = expansion_factor * r + 1
-        tk = _ring_topk(pts, remaining, r, k, level, lon_col, lat_col,
-                        point_id_col, query_id_col, two_phase)
-        flg = _flag(tk, r)
-        proven.append(flg.where(F.col("__ok")).select(*out_cols))
+        flagged = tk.withColumn("__ok", ok).localCheckpoint(eager=False)
+        proven.append(flagged.where(F.col("__ok")).select(*out_cols))
+        # unproven = not proven (covers zero-candidate queries, which
+        # have no topk rows at all); queries are the small side -> cheap
+        # anti-join
         remaining = remaining.join(
-            flg.where(F.col("__ok")).select(query_id_col).distinct(),
+            flagged.where(F.col("__ok")).select(query_id_col).distinct(),
             query_id_col, "left_anti",
         )
+        # Early exit once every query is proven — in round 1 this is the
+        # designed common case at adaptive level.  The probe is one tiny
+        # job (queries are the small side by contract and `flagged` is
+        # already the checkpointed frame the probe's anti-join reads),
+        # and it saves constructing + planning the later rounds and the
+        # brute-force subplan, whose localCheckpoint calls alone
+        # measured ~1.2 s of driver time per call while contributing
+        # zero rows.  The result set is unchanged: a round over an empty
+        # `remaining` is empty.
         if remaining.isEmpty():
-            out = proven[0]
-            for p in proven[1:]:
-                out = out.unionByName(p)
-            return out
+            return reduce(DataFrame.unionByName, proven)
 
     # exact brute-force pass for whatever survives expansion (rare:
     # pole-adjacent queries, k > population) — broadcast those queries
@@ -932,22 +810,6 @@ def knn_join(
         F.col(lon_col).alias("q_lon"),
         F.col(lat_col).alias("q_lat"),
     )
-    brute = points.crossJoin(F.broadcast(bad)).select(
-        query_id_col, "q_lon", "q_lat", point_id_col,
-        haversine_col(F.col(lon_col), F.col(lat_col),
-                      F.col("q_lon"), F.col("q_lat")).alias("dist_m"),
-    )
-    if two_phase:
-        brute = _prereduce_topk(brute, k, query_id_col, point_id_col)
-    w = Window.partitionBy(query_id_col).orderBy(F.col("dist_m").asc(),
-                                                 F.col(point_id_col).asc())
-    brute_topk = (
-        brute.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(*out_cols)
-    )
-    proven.append(brute_topk)
-    out = proven[0]
-    for p in proven[1:]:
-        out = out.unionByName(p)
-    return out
+    proven.append(_topk(points.crossJoin(F.broadcast(bad)), k, lon_col,
+                        lat_col, point_id_col, query_id_col, two_phase))
+    return reduce(DataFrame.unionByName, proven)

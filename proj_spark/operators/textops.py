@@ -621,12 +621,6 @@ def decontaminate_flags(
     )
 
 
-def simhash_from_tokens_col(toks: Column, bits: int = 48) -> Column:
-    """SimHash from an already-materialized (distinct) token array:
-    hash each token ONCE, then derive every bit from that value."""
-    return simhash_from_hashes_col(F.transform(toks, md5_long_col), bits)
-
-
 def simhash_from_hashes_col(hashes: Column, bits: int = 48) -> Column:
     """SimHash from a pre-hashed token array (array<long>).
 

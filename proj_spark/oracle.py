@@ -30,12 +30,6 @@ __all__ = [
     "sql_webmerc_fwd",
     "sql_merc_ell_fwd",
     "sql_lcc_fwd",
-    "sql_lcc_inv",
-    "sql_tmerc_fwd",
-    "sql_sterea_fwd",
-    "sql_eqearth_fwd",
-    "sql_aea_fwd",
-    "sql_datum_shift",
     "sql_cell",
     "sql_tile_x",
     "sql_tile_y",
@@ -190,186 +184,6 @@ def sql_lcc_fwd(lon: str, lat: str, code: str = "EPSG:2230") -> tuple[str, str]:
     x = f"(({_f(a)} * {xn} + {_f(x0)}) / {_f(to_m)})"
     y = f"(({_f(a)} * {yn} + {_f(y0)}) / {_f(to_m)})"
     return x, y
-
-
-def sql_lcc_inv(x: str, y: str, code: str = "EPSG:2230",
-                iters: int = 8) -> tuple[str, str]:
-    """Inverse LCC with phi2 fixed-point unrolled ``iters`` times.
-    Returns (lon_deg, lat_rad_expr...) -> actually (lon_deg, lat_deg)."""
-    P, a, x0, y0, to_m, lon0 = _lcc_P(code)
-    n, c, rho0, e = P["n"], P["c"], P["rho0"], P["e"]
-    xn = f"((({x}) * {_f(to_m)} - {_f(x0)}) / {_f(a)})"
-    yn = f"({_f(rho0)} - (({y}) * {_f(to_m)} - {_f(y0)}) / {_f(a)})"
-    rho = f"sqrt({xn}*{xn} + {yn}*{yn})"
-    lam = f"(atan2({xn}, {yn}) / {_f(n)})"
-    ts = f"pow({rho} / {_f(c)}, {_f(1.0 / n)})"
-    phi = f"({math.pi/2!r} - 2.0*atan({ts}))"
-    for _ in range(iters):
-        con = f"({_f(e)} * sin({phi}))"
-        phi = (
-            f"({math.pi/2!r} - 2.0*atan({ts} * "
-            f"pow((1.0 - {con})/(1.0 + {con}), {_f(0.5 * e)})))"
-        )
-    lon = f"(degrees({lam}) + {_f(lon0)})"
-    lat = f"degrees({phi})"
-    return lon, lat
-
-
-def sql_tmerc_fwd(lon: str, lat: str, code: str = "EPSG:6366") -> tuple[str, str]:
-    """Exact Krüger forward expanded to real trig (sin/cos x cosh/sinh)."""
-    params = parse_proj_string(EPSG[code].proj)[0]
-    if params["proj"] == "utm":
-        zone = int(params["zone"])
-        params = dict(params)
-        params.update({"lon_0": -183.0 + 6 * zone, "k": 0.9996,
-                       "x_0": 500000.0, "y_0": 0.0})
-    a, es = K.ellipsoid(params)
-    P = K.tmerc_setup(params, a, es)
-    e = P["e"]
-    lon0 = float(params.get("lon_0", 0.0))
-    x0 = float(params.get("x_0", 0.0))
-    y0 = float(params.get("y_0", 0.0))
-    scale = P["k0"] * P["A"]
-    phi = f"radians({lat})"
-    lam = f"radians(({lon}) - {_f(lon0)})"
-    tau = f"tan({phi})"
-    inner = f"({_f(e)} * ({tau}) / sqrt(1.0 + ({tau})*({tau})))"
-    sigma = _sinh(f"{_f(e)} * {_atanh(inner)}")
-    taup = (
-        f"(({tau}) * sqrt(1.0 + ({sigma})*({sigma}))"
-        f" - ({sigma}) * sqrt(1.0 + ({tau})*({tau})))"
-    )
-    xip = f"atan2({taup}, cos({lam}))"
-    etap = _asinh(f"sin({lam}) / sqrt(({taup})*({taup}) + cos({lam})*cos({lam}))")
-    xi_terms = [xip]
-    eta_terms = [etap]
-    for j in range(1, 7):
-        aj = _f(P["alpha"][j - 1])
-        xi_terms.append(f"{aj}*sin({2*j}.0*({xip}))*{_cosh(f'{2*j}.0*({etap})')}")
-        eta_terms.append(f"{aj}*cos({2*j}.0*({xip}))*{_sinh(f'{2*j}.0*({etap})')}")
-    xi = "(" + " + ".join(xi_terms) + ")"
-    eta = "(" + " + ".join(eta_terms) + ")"
-    x = f"({_f(a)} * ({_f(scale)} * {eta}) + {_f(x0)})"
-    y = f"({_f(a)} * ({_f(scale)} * {xi} - {_f(P['y_origin'] )}) + {_f(y0)})"
-    return x, y
-
-
-def sql_datum_shift(lon: str, lat: str, src_ellps: str, dst_ellps: str,
-                    dst_towgs84=None, src_towgs84=None,
-                    iters: int = 8) -> tuple[str, str]:
-    """Geodetic(src, degrees) -> geodetic(dst, RADIAN exprs) through
-    ECEF with optional Helmert shifts — the SQL mirror of
-    DatumShiftStep (cart inverse unrolled)."""
-    sa, ses = K.ellipsoid({"ellps": src_ellps})
-    da, des = K.ellipsoid({"ellps": dst_ellps})
-    phi = f"radians({lat})"
-    lam = f"radians({lon})"
-    N = f"({_f(sa)} / sqrt(1.0 - {_f(ses)}*sin({phi})*sin({phi})))"
-    X = f"({N} * cos({phi}) * cos({lam}))"
-    Y = f"({N} * cos({phi}) * sin({lam}))"
-    Z = f"({N} * {_f(1.0 - ses)} * sin({phi}))"
-    if src_towgs84 is not None and any(src_towgs84):
-        H = K.helmert_params(src_towgs84)
-        R = K._pv_rot_matrix(H)
-        s = H["s"]
-        X2 = f"({_f(H['tx'])} + {_f(s)}*({_f(R[0,0])}*{X} + {_f(R[0,1])}*{Y} + {_f(R[0,2])}*{Z}))"
-        Y2 = f"({_f(H['ty'])} + {_f(s)}*({_f(R[1,0])}*{X} + {_f(R[1,1])}*{Y} + {_f(R[1,2])}*{Z}))"
-        Z2 = f"({_f(H['tz'])} + {_f(s)}*({_f(R[2,0])}*{X} + {_f(R[2,1])}*{Y} + {_f(R[2,2])}*{Z}))"
-        X, Y, Z = X2, Y2, Z2
-    if dst_towgs84 is not None and any(dst_towgs84):
-        H = K.helmert_params(dst_towgs84)
-        R = K._pv_rot_matrix(H)
-        s = H["s"]
-        Xs = f"(({X} - {_f(H['tx'])}) / {_f(s)})"
-        Ys = f"(({Y} - {_f(H['ty'])}) / {_f(s)})"
-        Zs = f"(({Z} - {_f(H['tz'])}) / {_f(s)})"
-        # inverse rotation = R^T
-        X = f"({_f(R[0,0])}*{Xs} + {_f(R[1,0])}*{Ys} + {_f(R[2,0])}*{Zs})"
-        Y = f"({_f(R[0,1])}*{Xs} + {_f(R[1,1])}*{Ys} + {_f(R[2,1])}*{Zs})"
-        Z = f"({_f(R[0,2])}*{Xs} + {_f(R[1,2])}*{Ys} + {_f(R[2,2])}*{Zs})"
-    p = f"sqrt({X}*{X} + {Y}*{Y})"
-    lam2 = f"atan2({Y}, {X})"
-    phi2 = f"atan2({Z}, {p} * {_f(1.0 - des)})"
-    for _ in range(iters):
-        Nd = f"({_f(da)} / sqrt(1.0 - {_f(des)}*sin({phi2})*sin({phi2})))"
-        phi2 = f"atan2({Z} + {_f(des)}*{Nd}*sin({phi2}), {p})"
-    return lam2, phi2  # RADIANS
-
-
-def sql_sterea_fwd(lon: str, lat: str, code: str = "EPSG:3844") -> tuple[str, str]:
-    """4326 -> stereo70: WGS84 -> Pulkovo datum shift + gauss sphere
-    double stereographic."""
-    entry = EPSG[code]
-    params = parse_proj_string(entry.proj)[0]
-    a, es = K.ellipsoid(params)
-    P = K.sterea_setup(params, a, es)
-    lon0 = float(params["lon_0"])
-    x0 = float(params.get("x_0", 0.0))
-    y0 = float(params.get("y_0", 0.0))
-    lam_r, phi_r = sql_datum_shift(lon, lat, "WGS84", entry.datum_ellps,
-                                   dst_towgs84=entry.towgs84)
-    lam = f"({lam_r} - {_f(math.radians(lon0))})"
-    e, C, Kg, ratexp = P["e"], P["C"], P["K"], P["ratexp"]
-    srat = f"pow((1.0 - {_f(e)}*sin({phi_r})) / (1.0 + {_f(e)}*sin({phi_r})), {_f(ratexp)})"
-    chi = (
-        f"(2.0*atan({_f(Kg)} * pow(tan(0.5*({phi_r}) + {math.pi/4!r}), {_f(C)})"
-        f" * {srat}) - {math.pi/2!r})"
-    )
-    lamc = f"({_f(C)} * {lam})"
-    k = (
-        f"({_f(P['k0'] * 2.0 * P['R'])} / (1.0 + {_f(P['sinc0'])}*sin({chi})"
-        f" + {_f(P['cosc0'])}*cos({chi})*cos({lamc})))"
-    )
-    xn = f"({k} * cos({chi}) * sin({lamc}))"
-    yn = f"({k} * ({_f(P['cosc0'])}*sin({chi}) - {_f(P['sinc0'])}*cos({chi})*cos({lamc})))"
-    return (
-        f"({_f(a)} * {xn} + {_f(x0)})",
-        f"({_f(a)} * {yn} + {_f(y0)})",
-    )
-
-
-def sql_eqearth_fwd(lon: str, lat: str, code: str = "EPSG:8857") -> tuple[str, str]:
-    params = parse_proj_string(EPSG[code].proj)[0]
-    a, es = K.ellipsoid(params)
-    P = K.eqearth_setup(params, a, es)
-    lon0 = float(params.get("lon_0", 0.0))
-    phi = f"radians({lat})"
-    lam = f"radians(({lon}) - {_f(lon0)})"
-    q = _qsfn(f"sin({phi})", P["e"], P["one_es"])
-    beta = f"asin(least(1.0, greatest(-1.0, {q} / {_f(P['qp'])})))"
-    M = K._EQE_M
-    theta = f"asin(least(1.0, greatest(-1.0, {_f(M)} * sin({beta}))))"
-    t2 = f"(({theta})*({theta}))"
-    t6 = f"({t2}*{t2}*{t2})"
-    A1, A2, A3, A4 = K._EQE_A1, K._EQE_A2, K._EQE_A3, K._EQE_A4
-    ypoly = f"(({theta}) * ({_f(A1)} + {_f(A2)}*{t2} + {t6}*({_f(A3)} + {_f(A4)}*{t2})))"
-    dy = f"({_f(A1)} + {_f(3*A2)}*{t2} + {t6}*({_f(7*A3)} + {_f(9*A4)}*{t2}))"
-    rqda = P["rqda"]
-    x = f"({_f(a * rqda)} * {lam} * cos({theta}) / ({_f(M)} * {dy}))"
-    y = f"({_f(a * rqda)} * {ypoly})"
-    return x, y
-
-
-def sql_aea_fwd(lon: str, lat: str, code: str = "EPSG:3309") -> tuple[str, str]:
-    """4326 -> NAD27/California Albers: WGS84 -> NAD27 3-param shift
-    then Albers forward."""
-    entry = EPSG[code]
-    params = parse_proj_string(entry.proj)[0]
-    a, es = K.ellipsoid(params)
-    P = K.aea_setup(params, a, es)
-    lon0 = float(params["lon_0"])
-    x0 = float(params.get("x_0", 0.0))
-    y0 = float(params.get("y_0", 0.0))
-    lam_r, phi_r = sql_datum_shift(lon, lat, "WGS84", entry.datum_ellps,
-                                   dst_towgs84=entry.towgs84)
-    lam = f"({lam_r} - {_f(math.radians(lon0))})"
-    q = _qsfn(f"sin({phi_r})", P["e"], P["one_es"])
-    rho = f"({_f(P['dd'])} * sqrt({_f(P['c'])} - {_f(P['n'])} * {q}))"
-    theta = f"({_f(P['n'])} * {lam})"
-    return (
-        f"({_f(a)} * ({rho} * sin({theta})) + {_f(x0)})",
-        f"({_f(a)} * ({_f(P['rho0'])} - {rho} * cos({theta})) + {_f(y0)})",
-    )
 
 
 # ---------------------------------------------------------------------------

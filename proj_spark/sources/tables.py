@@ -22,8 +22,7 @@ from typing import Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
-__all__ = ["iceberg_available", "read_table", "write_table",
-           "write_bucketed_table"]
+__all__ = ["iceberg_available", "write_table", "write_bucketed_table"]
 
 
 def iceberg_available(spark: SparkSession) -> bool:
@@ -46,13 +45,6 @@ def _is_table_identifier(location: str) -> bool:
         return False
     parts = location.split(".")
     return len(parts) >= 2 and all(p.isidentifier() for p in parts)
-
-
-def read_table(spark: SparkSession, location: str) -> DataFrame:
-    """Read an Iceberg table (``catalog.db.table``) or a parquet path."""
-    if _is_table_identifier(location) and iceberg_available(spark):
-        return spark.read.format("iceberg").load(location)
-    return spark.read.parquet(location)
 
 
 def write_table(

@@ -10,6 +10,7 @@ from proj_spark.operators.geometry import (
     geom_bounds_udf,
     geom_linestring,
     geom_multipoint,
+    geom_multipolygon,
     geom_polygon,
     geom_rect,
     transform_geometry,
@@ -104,3 +105,29 @@ def test_geometry_collection_rows_roundtrip(spark):
     for g in out["geom"]:
         assert abs(g["parts"][0][0][0] - _E1[0]) < 0.2
         assert abs(g["parts"][0][0][1] - _E1[1]) < 0.2
+
+
+def test_multipolygon_transform_keeps_offsets(spark):
+    # two polygons, the second with a hole: kind and per-polygon ring
+    # offsets survive, every vertex equals the scalar Transform path
+    from proj_spark.crs import Transform
+
+    polys = [
+        [[(-116.5, 32.5), (-116.0, 32.5), (-116.0, 33.0), (-116.5, 32.5)]],
+        [[(-118.0, 34.0), (-117.0, 34.0), (-117.0, 35.0), (-118.0, 35.0),
+          (-118.0, 34.0)],
+         [(-117.8, 34.2), (-117.2, 34.2), (-117.2, 34.8), (-117.8, 34.2)]],
+    ]
+    g = geom_multipolygon(polys)
+    assert g["offsets"] == [0, 1]
+    out = transform_geometry(_df(spark, [g]), "EPSG:4326",
+                             "EPSG:6366").toPandas()["geom"][0]
+    assert out["kind"] == "MultiPolygon"
+    assert list(out["offsets"]) == [0, 1]
+    t = Transform.new_known_crs("EPSG:4326", "EPSG:6366")
+    rings = [ring for rings in polys for ring in rings]
+    assert [len(p) for p in out["parts"]] == [len(r) for r in rings]
+    for part, ring in zip(out["parts"], rings):
+        for got, (x, y) in zip(part, ring):
+            wx, wy = t.convert(x, y)
+            assert abs(got[0] - wx) < 1e-6 and abs(got[1] - wy) < 1e-6

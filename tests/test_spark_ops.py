@@ -13,7 +13,11 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from proj_spark.functions.transform import proj_udf, with_transformed
+from proj_spark.functions.transform import (
+    proj_udf,
+    transform_crs_to_crs,
+    with_transformed,
+)
 from proj_spark.operators import cells as C
 from proj_spark.operators import tiles as T
 from proj_spark.operators.joins import (
@@ -38,6 +42,16 @@ def test_transform_udf_kat(spark):
     assert abs(rows[1]["my"] - 1141263.0111604782) < 1e-6
     assert abs(rows[2]["my"] - 1141293.7960220438) < 1e-6
     assert rows[1]["proj_err"] is None
+
+
+def test_transform_crs_to_crs_kat(spark):
+    # the one-shot form replaces the coordinate columns in place
+    df = spark.createDataFrame([(1, 4760096.421921, 3744293.729449)],
+                               "id int, x double, y double")
+    row = transform_crs_to_crs(df, "EPSG:2230", "EPSG:26946",
+                               x_col="x", y_col="y").collect()[0]
+    assert abs(row["x"] - 1450880.2910605022) < 1e-6
+    assert abs(row["y"] - 1141263.0111604782) < 1e-6
 
 
 def test_transform_udf_rowwise_errors(spark):
@@ -89,21 +103,29 @@ def test_cell_parent_and_decode_roundtrip(spark):
     assert (C.np_cell(clon, clat, 12) == cell).all()
 
 
-def test_cell_ring_matches_numpy(spark):
+@pytest.mark.parametrize("level, r", [(1, 1), (2, 3), (7, 4)])
+def test_cell_block_matches_numpy_ring(spark, level, r):
+    # cell_block over qix +- r, qiy +- r is np_cell_ring's neighbourhood,
+    # each cell once, also where 2r+1 >= 2^level wraps the longitude
     rng = np.random.default_rng(9)
-    lon = rng.uniform(-179, 179, 50)
-    lat = rng.uniform(-80, 80, 50)
-    cell = C.np_cell(lon, lat, 7)
-    df = spark.createDataFrame(pd.DataFrame({"cell": cell}))
+    lon = np.concatenate([rng.uniform(-179, 179, 30), [-180.0, 179.99]])
+    lat = np.concatenate([rng.uniform(-80, 80, 30), [-89.99, 89.99]])
+    cell = C.np_cell(lon, lat, level)
+    df = spark.createDataFrame(pd.DataFrame({"i": np.arange(len(cell)),
+                                             "lon": lon, "lat": lat}))
+    ix, iy = C._col_ij(F.col("lon"), F.col("lat"), level)
     got = (
-        df.select(F.col("cell"), C.cell_ring_col(F.col("cell"), 7, 1).alias("ring"))
-        .toPandas()
+        C.cell_block(df.select("i", ix.alias("ix"), iy.alias("iy")), level,
+                     F.col("ix") - r, F.col("ix") + r,
+                     F.col("iy") - r, F.col("iy") + r)
+        .groupBy("i").agg(F.collect_list("cell").alias("cells"))
+        .toPandas().set_index("i")["cells"]
     )
-    want = C.np_cell_ring(cell, 1)
+    want = C.np_cell_ring(cell, r)
     for i in range(len(cell)):
-        w = set(int(v) for v in want[i] if v >= 0)
-        g = set(int(v) for v in got["ring"][i])
-        assert g == w
+        g = [int(v) for v in got[i]]
+        assert len(g) == len(set(g)), (level, r, i)
+        assert set(g) == {int(v) for v in want[i] if v >= 0}, (level, r, i)
 
 
 def test_tiles_match_numpy_and_bounds(spark):
@@ -468,18 +490,6 @@ def test_haversine_known_value(spark):
     assert abs(d - 343_500) < 1_500
 
 
-def test_with_cell_matches_cell_col(spark):
-    # the chained-projection encoding is bit-for-bit the nested form
-    rng = np.random.default_rng(17)
-    pdf = pd.DataFrame({"lon": rng.uniform(-180, 180, 400),
-                        "lat": rng.uniform(-90, 90, 400)})
-    df = spark.createDataFrame(pdf)
-    for level in (0, 3, 12, 26):
-        a = C.with_cell(df, "lon", "lat", level, out="c").select("c").toPandas()
-        b = df.select(C.cell_col(F.col("lon"), F.col("lat"), level).alias("c")).toPandas()
-        assert (a["c"].values == b["c"].values).all(), level
-
-
 def test_pip_join_left_and_empty_edges(spark):
     polys = spark.createDataFrame(pd.DataFrame([{
         "poly_id": "box",
@@ -578,9 +588,25 @@ def test_radius_join_exact_vs_bruteforce(spark):
                          got["point_id"].astype(int)))
         assert gotset == want, radius
     # plan shape: the points side joins via a broadcast of the
-    # exploded query rings — no shuffle of the big table
+    # exploded query rings — no shuffle of the big table — and the
+    # query branch needs no (query, cell) dedup: no aggregate, no
+    # hash exchange under the BroadcastExchange
     plan = radius_join(P, Q, 300_000.0)._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
+    lines = plan.splitlines()
+    top = next(i for i, ln in enumerate(lines) if "BroadcastExchange" in ln)
+
+    def depth(ln):
+        return len(ln) - len(ln.lstrip(" :+-"))
+
+    branch = [lines[top]]
+    for ln in lines[top + 1:]:
+        if depth(ln) <= depth(lines[top]):
+            break
+        branch.append(ln)
+    branch = "\n".join(branch)
+    assert "HashAggregate" not in branch, branch
+    assert "Exchange hashpartitioning" not in branch, branch
 
 
 def test_asof_join_matches_merge_asof(spark):
